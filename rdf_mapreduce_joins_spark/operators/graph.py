@@ -55,7 +55,9 @@ def transitive_closure(
     2^max_iter are found, which at 20 covers any graph a join could
     materialize. Returns columns ``(src, dst)``; input edge rows with
     NULL endpoints are dropped (NULL never joins anyway — dropping
-    keeps the distinct small)."""
+    keeps the distinct small). Raises RuntimeError when ``max_iter``
+    rounds pass without a round that adds no pair (the closure may be
+    partial), like kcore and connected_components."""
     # LAZY checkpoints + count-as-materializer throughout the loop
     # family (round 12): an eager checkpoint runs one job and the
     # convergence count a second; with eager=False the count IS the
@@ -79,9 +81,13 @@ def transitive_closure(
         m = grown.count()
         closure = grown
         if m == n:
-            break
+            return closure
         n = m
-    return closure
+    raise RuntimeError(
+        f"transitive_closure did not reach its fixpoint within {max_iter} "
+        "rounds — the last round still added pairs. Re-run with a larger "
+        "max_iter (path length exceeds 2^max_iter)."
+    )
 
 
 def degrees(

@@ -1,45 +1,51 @@
-"""Generic BGP/SPARQL execution over ANY raw triples DataFrame.
+"""The raw-frame pattern source: SPARQL over ANY triples or quads frame.
 
-The star-schema compiler (plans/rdf.py) is the oracle-checked,
-dictionary-encoded fast path for the driver's fixtures — but a user of
-the reference arrives with N-TRIPLES FILES of arbitrary vocabulary
-(that is the reference's entire ingest surface, SURVEY.md §1.1 [K]).
-This module closes that loop: ``read_ntriples`` (sources/ntriples.py)
-→ a plain ``(subject, predicate, object)`` DataFrame → the same SPARQL
-text running over it.
+The star-schema source (plans/rdf.py) is the fast path over the
+fixtures' star schema — but a user of the reference arrives with
+N-TRIPLES FILES of arbitrary vocabulary (that is the reference's entire
+ingest surface, SURVEY.md §1.1 [K]). This module closes that loop:
+``read_ntriples`` (sources/ntriples.py) → a plain ``(subject,
+predicate, object)`` DataFrame → the same SPARQL text, run by the same
+executor (plans/sparql.py) as the star path. This source supplies only
+what differs:
 
-Differences from the star-schema path, by design:
+* pattern lowering over the raw frame (:func:`_pattern_frame`): no
+  vocabulary validation — an unknown predicate is an empty frame, not
+  an error; ``?x a <C>`` is a triple pattern on the rdf:type predicate
+  (the star path compiles it to scan pruning); property-path
+  modifiers ``+``/``*``/``?`` apply to ANY predicate (one node
+  universe);
+* named graphs: on a quad frame (a ``graph`` column) patterns outside
+  GRAPH match the default graph, ``GRAPH`` blocks scope to named
+  graphs, and FROM / FROM NAMED select the query's dataset;
+* term encoding: a frame from the persisted store
+  (:func:`build_triples_store` / :func:`build_quads_store`) carries
+  ``xxhash64`` ids next to the strings; given the store's dictionary,
+  joins, closures and DISTINCT run on the ids and the projection
+  decodes through a dictionary join — unless the query reads term
+  strings mid-plan (:func:`_needs_strings`). Any other frame joins the
+  strings the file gave;
+* no provable ORDER BY bound (plain sorts).
 
-* no vocabulary validation — any predicate IRI matches whatever the
-  data holds (an unknown predicate is an empty frame, not an error);
-* ``?x a <C>`` compiles to a triple pattern on the rdf:type predicate
-  (the data-level meaning; the star path compiles it to scan pruning);
-* no dictionary encoding — terms join as the strings the file gave
-  (generic IRIs have no algebraic key to exploit); at scale, ingest
-  would assign surrogate ids and the star-schema path's design shows
-  where that goes;
-* property-path modifiers ``+``/``*``/``?`` apply to ANY predicate
-  (one universe of nodes — the self-referential-FK restriction is a
-  star-schema typing concern, not an RDF one).
-
-Plan shape is otherwise identical: one filtered projection of the
-triples frame per pattern, inner-join chain on shared variables,
-left/anti/semi joins for OPTIONAL/negation/EXISTS, Catalyst/AQE
-choosing physical strategies. The triples frame should be persisted
-parquet (partitioned or z-ordered by predicate — see sources/sinks)
-so per-pattern predicate filters prune at scan time.
+The triples frame should be persisted parquet partitioned by predicate
+(the store layout) so per-pattern predicate filters prune at file
+listing.
 """
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rdf_mapreduce_joins_spark.plans.rdf import _path_modifier
 from rdf_mapreduce_joins_spark.plans.sparql import (
     ParsedQuery,
     SparqlUnsupportedError,
+    _execute,
     _Group,
-    _rewrite_notbound,
+    _join_chain,
     parse_sparql,
 )
 
@@ -58,10 +64,10 @@ def _pattern_frame(
     """One triple pattern over the raw frame: predicate IN-filter,
     endpoint constant filters, closure/identity for path modifiers.
 
-    ``encoded``: terms become ``xxhash64`` int64 ids right after the
-    predicate filter — closures, joins, and distincts then run on
-    longs; constants compare as ``xxhash64(lit)`` (constant-folded).
-    See :func:`term_dictionary` for decode and the collision story.
+    ``encoded``: endpoints are the store's ``subject_id``/``object_id``
+    int64 columns (column pruning then leaves the strings unread);
+    constants compare as ``xxhash64(lit)`` (constant-folded). See
+    :func:`term_dictionary` for decode and the collision story.
 
     A variable predicate (``?s ?p ?o``) skips the predicate filter and
     binds the predicate NAME as a string column — predicates are
@@ -90,15 +96,20 @@ def _pattern_frame(
         else:
             triples = triples.filter(F.col("graph") == graph)
     p_var = preds[0].startswith("?")
+    ends = (
+        [F.col("subject_id").alias("subject"), F.col("object_id").alias("object")]
+        if encoded
+        else [F.col("subject"), F.col("object")]
+    )
     if preds[0] == "/":
         # Grouped-sequence path (p1/p2)mod: compose the sub-step edge
         # frames into one (subject, object) relation by chaining
         # equi-joins through the intermediate keys — the same lowering
-        # as the star compiler (plans/rdf.py::_pattern_df), but on raw
+        # as the star source (plans/rdf.py::_pattern_df), but on raw
         # (s, p, o): each step is a predicate-filtered projection (no
         # FK spec resolution — one RDF node universe), an inverse step
         # (^p) swaps endpoints before joining, and the shared modifier
-        # code below then treats the composed frame like any other
+        # lowering below then treats the composed frame like any other
         # edge set. With the modifier the closure runs on the COMPOSED
         # edges, so (p/p)+ reaches even distances only — a genuinely
         # different relation from p+.
@@ -116,19 +127,7 @@ def _pattern_frame(
         df = None
         for raw in preds[1:]:
             pred, inv = raw.lstrip("^"), raw.startswith("^")
-            step = triples.filter(F.col("predicate") == pred)
-            if encoded and "subject_id" in step.columns:
-                step = step.select(
-                    F.col("subject_id").alias("subject"),
-                    F.col("object_id").alias("object"),
-                )
-            elif encoded:
-                step = step.select(
-                    F.xxhash64("subject").alias("subject"),
-                    F.xxhash64("object").alias("object"),
-                )
-            else:
-                step = step.select("subject", "object")
+            step = triples.filter(F.col("predicate") == pred).select(*ends)
             if inv:
                 step = step.select(
                     F.col("object").alias("subject"),
@@ -146,60 +145,30 @@ def _pattern_frame(
                 df = df.join(mid, df["object"] == mid["__mid"]).select(
                     df["subject"], F.col("__obj").alias("object")
                 )
-        # falls through to the shared modifier/constant/projection tail
-    elif p_var:
-        df = triples  # matches every predicate; nothing to filter
-    elif preds[0] == "!":
-        # negated property set: any predicate NOT listed (unbound)
-        df = triples.filter(~F.col("predicate").isin(*preds[1:]))
     else:
-        df = triples.filter(
-            F.col("predicate").isin(*preds)
-            if len(preds) > 1
-            else (F.col("predicate") == preds[0])
-        )
-    if preds[0] != "/":  # the seq branch already projected (subject, object)
+        if p_var:
+            df = triples  # matches every predicate; nothing to filter
+        elif preds[0] == "!":
+            # negated property set: any predicate NOT listed (unbound)
+            df = triples.filter(~F.col("predicate").isin(*preds[1:]))
+        else:
+            df = triples.filter(
+                F.col("predicate").isin(*preds)
+                if len(preds) > 1
+                else (F.col("predicate") == preds[0])
+            )
         extra_cols = ([F.col("predicate")] if p_var else []) + (
             [F.col("graph")] if g_var else []
         )
-        if encoded and "subject_id" in df.columns:
-            # pre-encoded store (build_triples_store): ids were computed
-            # once at ingest; column pruning drops the string columns so
-            # the scan reads only the two longs
-            df = df.select(
-                F.col("subject_id").alias("subject"),
-                F.col("object_id").alias("object"),
-                *extra_cols,
-            )
-        elif encoded:
-            df = df.select(
-                F.xxhash64("subject").alias("subject"),
-                F.xxhash64("object").alias("object"),
-                *extra_cols,
-            )
-        else:
-            df = df.select("subject", "object", *extra_cols)
+        df = df.select(*ends, *extra_cols)
     if mod and g_var:
         raise SparqlUnsupportedError(
             "path modifiers inside GRAPH ?var are unsupported — the "
             "closure would need to run per graph; bind the graph "
             "constant instead"
         )
-    if mod:
-        from rdf_mapreduce_joins_spark.operators.graph import transitive_closure
+    df = _path_modifier(df, mod)
 
-        if mod in ("+", "*"):
-            closed = transitive_closure(df, src="subject", dst="object").select(
-                F.col("src").alias("subject"), F.col("dst").alias("object")
-            )
-        if mod == "+":
-            df = closed
-        else:
-            nodes = df.select("subject").unionByName(
-                df.select(F.col("object").alias("subject"))
-            )
-            ident = nodes.select("subject", F.col("subject").alias("object"))
-            df = (closed if mod == "*" else df).unionByName(ident).distinct()
     def const(term: str) -> F.Column:
         return F.xxhash64(F.lit(term)) if encoded else F.lit(term)
 
@@ -219,138 +188,6 @@ def _pattern_frame(
     if not cols:
         cols = [F.lit(1).alias("_exists")]
     return df.select(*cols)
-
-
-def _join_group(
-    triples: DataFrame,
-    g: _Group,
-    types: dict[str, str],
-    encoded: bool = False,
-    graph: str | None = None,
-) -> DataFrame:
-    pats = list(g.triples)
-    # ?x a <C> type constraints become rdf:type patterns at data level
-    for var, cls in types.items():
-        pats.append((var, (RDF_TYPE,), cls, ""))
-    if not pats:
-        raise SparqlUnsupportedError("group needs at least one triple pattern")
-    out: DataFrame | None = None
-    for s, preds, o, mod in pats:
-        df = _pattern_frame(triples, s, preds, o, mod, encoded=encoded, graph=graph)
-        if out is None:
-            out = df
-        else:
-            shared = [c for c in df.columns if c in out.columns]
-            if not shared:
-                raise SparqlUnsupportedError(
-                    f"pattern ({s} {preds} {o}) shares no variable with prior patterns"
-                )
-            out = out.join(df, on=shared, how="inner")
-    assert out is not None
-    return out
-
-
-def _group_frames(
-    triples: DataFrame,
-    g: _Group,
-    types: dict[str, str],
-    encoded: bool = False,
-) -> DataFrame:
-    """A group's joined solution frame: default-graph patterns (plus
-    data-level rdf:type constraints), then one frame per GRAPH block,
-    inner-joined on shared variables (a shared ?g graph variable joins
-    blocks across the same graph). Used for the main WHERE group and
-    for OPTIONAL/MINUS/EXISTS sub-groups alike."""
-    frames: list[DataFrame] = []
-    if g.triples or types:
-        frames.append(_join_group(triples, g, types, encoded=encoded))
-    for gterm, sub in g.graphs:
-        frames.append(_join_group(triples, sub, {}, encoded=encoded, graph=gterm))
-    if not frames:
-        raise SparqlUnsupportedError("group needs at least one triple pattern")
-    out = frames[0]
-    for fdf in frames[1:]:
-        shared = [c for c in fdf.columns if c in out.columns]
-        if not shared:
-            raise SparqlUnsupportedError(
-                "GRAPH block shares no variable with the rest of the group"
-            )
-        out = out.join(fdf, on=shared, how="inner")
-    return out
-
-
-def _compile(
-    triples: DataFrame, q: ParsedQuery, g: _Group, encoded: bool = False
-) -> DataFrame:
-    if g.unions:
-        raise SparqlUnsupportedError(
-            "UNION inside a group that also has other structure is unsupported"
-        )
-    from rdf_mapreduce_joins_spark.plans.sparql import _sub_group_filters
-
-    out = _group_frames(triples, g, q.types, encoded=encoded)
-    for sub, how in (
-        *[(x, "left") for x in g.optionals],
-        *[(x, "left_anti") for x in g.negations],
-        *[(x, "left_semi") for x in g.exists],
-    ):
-        # local-vars-only filters, validated; GRAPH blocks inside the
-        # sub-group compile here (quad executor), unlike the star path
-        sub_filters = _sub_group_filters(sub, allow_graphs=True)
-        if sub_filters and encoded:
-            raise SparqlUnsupportedError(
-                "sub-group FILTER needs term strings — encoded path should "
-                "have fallen back (see _needs_strings)"
-            )
-        sdf = _group_frames(triples, sub, {}, encoded=encoded)
-        for f in sub_filters:
-            sdf = sdf.filter(F.expr(f[1]))
-        shared = [c for c in sdf.columns if c in out.columns]
-        if not shared:
-            raise SparqlUnsupportedError("sub-group shares no variable")
-        out = out.join(sdf, on=shared, how=how)
-    for sq in g.subqueries:
-        sdf = _run_parsed(triples, sq)
-        shared = [c for c in sdf.columns if c in out.columns]
-        if not shared:
-            raise SparqlUnsupportedError(
-                "subquery shares no variable with the outer group"
-            )
-        out = out.join(sdf, on=shared, how="inner")
-    for f in g.filters:
-        if f[0] != "sql":
-            raise AssertionError("notbound filters are rewritten before compile")
-        out = out.filter(F.expr(f[1]))
-    for var, terms in g.values:
-        name = var[1:]
-        if name not in out.columns:
-            raise SparqlUnsupportedError(f"VALUES {var} over a variable no pattern binds")
-        out = out.filter(F.col(name).isin(*terms))
-    for vars_, rows_ in g.values_multi:
-        for v in vars_:
-            if v[1:] not in out.columns:
-                raise SparqlUnsupportedError(
-                    f"VALUES {v} over a variable no pattern binds"
-                )
-        cond = None
-        for row in rows_:
-            conj = None
-            for v, t in zip(vars_, row):
-                c = F.col(v[1:]) == F.lit(t)
-                conj = c if conj is None else (conj & c)
-            cond = conj if cond is None else (cond | conj)
-        out = out.filter(cond)
-    for alias, (_tag, sql, vs) in g.binds:
-        a = alias[1:]
-        if a in out.columns:
-            raise SparqlUnsupportedError(f"BIND alias {alias} already bound")
-        for v in vs:
-            if v[1:] not in out.columns:
-                raise SparqlUnsupportedError(
-                    f"BIND references unbound variable {v}"
-                )
-        out = out.withColumn(a, F.expr(sql))
-    return out
 
 
 def term_dictionary(triples: DataFrame) -> DataFrame:
@@ -449,54 +286,127 @@ def _needs_strings(q: ParsedQuery) -> bool:
     )
 
 
-def _decode_cols(out: DataFrame, dictionary: DataFrame, cols: list[str]) -> DataFrame:
-    """id columns → term strings via per-column dictionary joins (the
-    decode-on-projection step; runs on the final row set, not the
-    intermediate joins)."""
-    for c in cols:
-        d = dictionary.select(F.col("id").alias(c), F.col("term").alias(f"__{c}"))
-        out = out.join(d, on=c, how="left").drop(c).withColumnRenamed(f"__{c}", c)
-    return out
+@dataclass(frozen=True)
+class _RawCodec:
+    """How a raw-frame solution holds its terms: strings, or (encoded)
+    hash ids that decode through the dictionary — except ``strings``,
+    the predicate/graph variables, which bind names on both paths."""
+
+    encoded: bool
+    dictionary: DataFrame | None
+    strings: frozenset[str]
+
+    def literal(self, name: str, term: str) -> str:
+        # VALUES forces the string path (_needs_strings)
+        return "'" + term.replace("'", "''") + "'"
+
+    def decode(self, df: DataFrame, names: list[str]) -> DataFrame:
+        """id columns → term strings via per-column dictionary joins
+        (decode-on-projection: runs on the final row set, not the
+        intermediate joins)."""
+        if not self.encoded:
+            return df
+        out = df
+        for c in names:
+            if c in self.strings:
+                continue
+            d = self.dictionary.select(
+                F.col("id").alias(c), F.col("term").alias(f"__{c}")
+            )
+            out = out.join(d, on=c, how="left").drop(c).withColumnRenamed(f"__{c}", c)
+        return out.select(*df.columns)
+
+
+class _RawSource:
+    """Pattern source (plans/sparql.py::_PatternSource) over a raw
+    (subject, predicate, object[, graph]) frame."""
+
+    graphs = True
+
+    def __init__(
+        self, frame: DataFrame, dictionary: DataFrame | None, encoded: bool = False
+    ):
+        self.frame, self.dictionary, self.encoded = frame, dictionary, encoded
+
+    def for_query(self, q: ParsedQuery) -> "_RawSource":
+        """The query's dataset (FROM / FROM NAMED), and ids only when
+        the frame carries the store's id columns, the dictionary is
+        given and the query needs no term strings mid-plan."""
+        frame = _apply_dataset_clauses(self.frame, q)
+        encoded = (
+            self.dictionary is not None
+            and "subject_id" in frame.columns
+            and not _needs_strings(q)
+        )
+        return _RawSource(frame, self.dictionary, encoded)
+
+    def lower(
+        self, q: ParsedQuery, groups: list[_Group], filter_vars: set[str], subq: bool
+    ) -> tuple[list[list[DataFrame]], _RawCodec]:
+        """Per-pattern frames for each group — the required group
+        gains a data-level rdf:type pattern per ``?x a <C>`` — then one
+        joined frame per GRAPH block (a shared ?g graph variable joins
+        blocks across the same graph)."""
+        types = [(var, (RDF_TYPE,), cls, "") for var, cls in q.types.items()]
+        frames = []
+        for i, g in enumerate(groups):
+            pats = [*g.triples, *(types if i == 0 else [])]
+            frames.append(
+                [_pattern_frame(self.frame, *t, encoded=self.encoded) for t in pats]
+                + [
+                    _join_chain(
+                        [
+                            _pattern_frame(
+                                self.frame, *t, encoded=self.encoded, graph=gterm
+                            )
+                            for t in sub.triples
+                        ]
+                    )
+                    for gterm, sub in g.graphs
+                ]
+            )
+        pvars = frozenset(_predicate_vars(q))
+        return frames, _RawCodec(self.encoded, self.dictionary, pvars)
+
+    def agg_input(self, codec: _RawCodec, fn: str, var: str, q: ParsedQuery) -> str:
+        return var[1:]  # one term universe: MIN/MAX/SUM/AVG over the strings
+
+    def order_bound(self, q: ParsedQuery) -> None:
+        return None
+
+    def triples(self) -> DataFrame:
+        return self.frame.select("subject", "predicate", "object")
 
 
 def sparql_triples(
-    triples: DataFrame,
-    text: str,
-    encoded: bool = False,
-    dictionary: DataFrame | None = None,
+    triples: DataFrame, text: str, dictionary: DataFrame | None = None
 ) -> DataFrame:
     """Run SPARQL text over a raw (subject, predicate, object) frame —
-    the generic-vocabulary twin of :func:`plans.sparql.sparql`. Shares
-    the parser (and therefore the full grammar: paths, PREFIX, FILTER,
-    UNION, VALUES, ASK/CONSTRUCT, aggregates); strings join as given,
-    MIN/MAX apply to anything (one term universe).
+    the generic-vocabulary twin of :func:`plans.sparql.sparql`, through
+    the same executor (full grammar: paths, PREFIX, FILTER, UNION,
+    VALUES, ASK/CONSTRUCT/DESCRIBE, subqueries, aggregates). Strings
+    join as given; MIN/MAX apply to anything (one term universe).
 
-    ``encoded=True`` runs joins/closures/distincts on ``xxhash64``
-    int64 term ids instead of strings (the S2RDF-style surrogate-id
-    design, hash-derived so ingest needs no id service), decoding via
-    the dictionary only on the final projection. Queries that need
-    term STRINGS mid-plan (FILTER/VALUES/MIN/MAX) fall back to the
-    string path automatically — results are identical either way
-    (equivalence-tested).
-
-    Honest cost accounting (measured, sf0.1 / 1.5M triples, short
-    IRIs): per-query the STRING path wins (~3x) — the dictionary
-    distinct and the final decode joins cost more than short-string
-    joins save. The encoded path is the design for (a) a dictionary
-    built ONCE at ingest and passed via ``dictionary=`` (persist
-    :func:`term_dictionary`'s output next to the triples), and (b)
-    real-world IRI lengths (LUBM/DBpedia IRIs run 40-120 bytes, not
-    the ~12 of these fixtures) where hash-compare beats string-compare
-    in the join hot loop."""
-    q = parse_sparql(text, validate_vocab=False)
-    return _run_parsed(triples, q, encoded=encoded, dictionary=dictionary)
+    Joins, closures and DISTINCT run on ``xxhash64`` int64 term ids
+    when ``triples`` comes from a persisted store (it carries
+    ``subject_id``/``object_id``) and its ``dictionary`` is passed —
+    the S2RDF-style surrogate-id design, hash-derived so ingest needs
+    no id service, decoded through the dictionary only on the final
+    projection. Queries that read term STRINGS mid-plan (FILTER,
+    VALUES, BIND, subqueries, MIN/MAX/SUM/AVG…, see
+    :func:`_needs_strings`) use the store's string columns instead;
+    results are identical either way (equivalence-tested). Any other
+    frame runs on strings: ids pay off only when built once at ingest
+    — hashing per query costs a dictionary distinct plus decode joins,
+    measured ~3× slower than short-string joins (sf0.1, 1.5M
+    triples)."""
+    return _execute(
+        _RawSource(triples, dictionary), parse_sparql(text, validate_vocab=False)
+    )
 
 
 def sparql_quads(
-    quads: DataFrame,
-    text: str,
-    encoded: bool = False,
-    dictionary: DataFrame | None = None,
+    quads: DataFrame, text: str, dictionary: DataFrame | None = None
 ) -> DataFrame:
     """SPARQL over an RDF DATASET: a quad frame with a ``graph``
     column alongside (subject, predicate, object). Graph semantics
@@ -508,16 +418,19 @@ def sparql_quads(
       (a partition-prunable filter when the store is written
       partitioned by graph),
     * ``GRAPH ?g { ... }`` iterates the named graphs, binding ?g — a
-      string column, shared across blocks to join within one graph.
+      string column, shared across blocks to join within one graph,
+    * ``FROM`` / ``FROM NAMED`` replace the dataset (see
+      :func:`_apply_dataset_clauses`).
 
     Everything else (paths, FILTER, OPTIONAL/MINUS/EXISTS, aggregates,
-    the xxhash64-encoded join path) is inherited from
+    the id path for store frames with their ``dictionary``) is as in
     :func:`sparql_triples`; graph names, like predicate names, are
     never hash-encoded."""
     if "graph" not in quads.columns:
         raise ValueError("sparql_quads needs a 'graph' column (nullable)")
-    q = parse_sparql(text, validate_vocab=False)
-    return _run_parsed(quads, q, encoded=encoded, dictionary=dictionary)
+    return _execute(
+        _RawSource(quads, dictionary), parse_sparql(text, validate_vocab=False)
+    )
 
 
 def _apply_dataset_clauses(triples: DataFrame, q: ParsedQuery) -> DataFrame:
@@ -545,119 +458,6 @@ def _apply_dataset_clauses(triples: DataFrame, q: ParsedQuery) -> DataFrame:
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out
-
-
-def _run_parsed(
-    triples: DataFrame,
-    q: ParsedQuery,
-    encoded: bool = False,
-    dictionary: DataFrame | None = None,
-) -> DataFrame:
-    triples = _apply_dataset_clauses(triples, q)
-    _rewrite_notbound(q)
-    if q.form == "describe":
-        consts = [t for t in q.describe_terms if not t.startswith("?")]
-        nodes = None
-        if consts:
-            nodes = triples.sparkSession.createDataFrame(
-                [(c,) for c in consts], "v string"
-            )
-        if q.select:
-            sol = _compile(triples, q, q.where)
-            for v in q.select:
-                nd = sol.select(F.col(v[1:]).alias("v"))
-                nodes = nd if nodes is None else nodes.unionByName(nd)
-        assert nodes is not None
-        nodes = nodes.distinct()
-        tri = triples.select("subject", "predicate", "object")
-        subj = tri.join(nodes, tri["subject"] == nodes["v"], "leftsemi")
-        obj = tri.join(nodes, tri["object"] == nodes["v"], "leftsemi")
-        return subj.unionByName(obj).distinct()
-    enc = encoded and not _needs_strings(q)
-    if enc and dictionary is None:
-        dictionary = term_dictionary(triples)
-    pvars = _predicate_vars(q)
-
-    def decode(df: DataFrame, cols: list[str]) -> DataFrame:
-        # predicate vars bind NAMES (strings) even on the encoded
-        # path — only endpoint id columns go through the dictionary
-        cols = [c for c in cols if c not in pvars]
-        return _decode_cols(df, dictionary, cols) if enc else df
-
-    if q.aggs:
-        if q.where.unions:
-            raise SparqlUnsupportedError("aggregates over UNION are unsupported")
-        sol = _compile(triples, q, q.where, encoded=enc)
-        gvars = [v[1:] for v in q.group_by]
-        from rdf_mapreduce_joins_spark.plans.sparql import _literal_agg
-
-        aggs = []
-        for fn, var, dist, alias, sep in q.aggs:
-            a = alias[1:]
-            if var is None:
-                aggs.append(F.count(F.lit(1)).alias(a))
-                continue
-            name = var[1:]
-            if name not in sol.columns:
-                raise SparqlUnsupportedError(f"aggregate over unbound variable {var}")
-            if fn == "COUNT":
-                e = F.countDistinct(name) if dist else F.count(name)
-            else:
-                e = _literal_agg(fn, name, dist, sep)
-            aggs.append(e.alias(a))
-        out = sol.groupBy(*gvars).agg(*aggs) if gvars else sol.agg(*aggs)
-        out = decode(out, gvars)  # group keys decode once per group
-        if q.having is not None:
-            out = out.filter(F.expr(q.having[1]))
-        out = out.select(*[v[1:] for v in q.select])
-    elif q.form == "ask":
-        sol = _compile(triples, q, q.where, encoded=enc)
-        return sol.limit(1).agg((F.count(F.lit(1)) > 0).alias("ask"))
-    elif q.where.unions:
-        parts = [_compile(triples, q, b, encoded=enc) for b in q.where.unions]
-        out = parts[0].select(*[v[1:] for v in q.select])
-        for p in parts[1:]:
-            out = out.unionByName(p.select(*[v[1:] for v in q.select]))
-        if q.distinct:
-            out = out.distinct()  # distinct over ids when encoded
-        out = decode(out, [v[1:] for v in q.select])
-        out = out.select(*[v[1:] for v in q.select])
-    else:
-        out = _compile(triples, q, q.where, encoded=enc).select(
-            *[v[1:] for v in q.select]
-        )
-        if q.distinct:
-            out = out.distinct()
-        out = decode(out, [v[1:] for v in q.select])
-        out = out.select(*[v[1:] for v in q.select])
-    if q.form == "construct":
-        def term(t: str) -> F.Column:
-            return F.col(t[1:]) if t.startswith("?") else F.lit(t)
-
-        assert q.template is not None
-        parts = [
-            out.select(
-                term(s).alias("subject"),
-                F.lit(p).alias("predicate"),
-                term(o).alias("object"),
-            )
-            for s, p, o in q.template
-        ]
-        tri = parts[0]
-        for pdf in parts[1:]:
-            tri = tri.unionByName(pdf)
-        return tri.distinct()
-    if q.order_by:
-        cols = [
-            F.col(v[1:]).asc_nulls_last() if asc else F.col(v[1:]).desc_nulls_last()
-            for v, asc in q.order_by
-        ]
-        out = out.orderBy(*cols)
-    if q.offset is not None:
-        out = out.offset(q.offset)
-    if q.limit is not None:
-        out = out.limit(q.limit)
     return out
 
 
@@ -726,7 +526,7 @@ def sparql_quads_indexed(spark, path: str, text: str) -> DataFrame:
     # have no ingest_batch, streamed ones carry it as a partition col.
     quads = spark.read.parquet(f"{path}/quads").drop("ingest_batch")
     dictionary = spark.read.parquet(f"{path}/dictionary").drop("ingest_batch")
-    return sparql_quads(quads, text, encoded=True, dictionary=dictionary)
+    return sparql_quads(quads, text, dictionary=dictionary)
 
 
 def sparql_triples_indexed(spark, path: str, text: str) -> DataFrame:
@@ -739,7 +539,7 @@ def sparql_triples_indexed(spark, path: str, text: str) -> DataFrame:
     inline path)."""
     tri = spark.read.parquet(f"{path}/triples").drop("ingest_batch")
     dictionary = spark.read.parquet(f"{path}/dictionary").drop("ingest_batch")
-    return sparql_triples(tri, text, encoded=True, dictionary=dictionary)
+    return sparql_triples(tri, text, dictionary=dictionary)
 
 
 # --------------------------------------------------------------------------

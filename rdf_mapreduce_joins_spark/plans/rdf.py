@@ -616,6 +616,31 @@ def _pred_df_pruned(
     return pred_df(spark, sf_dir, pred, table=table, encoded=encoded)
 
 
+def _path_modifier(df: DataFrame, mod: str) -> DataFrame:
+    """A SPARQL path modifier over a (subject, object) edge frame —
+    the one lowering both SPARQL pattern sources share: ``+`` is the
+    iterative-doubling closure (operators/graph.py), ``*`` closure ∪
+    identity and ``?`` edges ∪ identity. The zero-length match pairs
+    every node of the edge set's own domain with itself (see the
+    Pattern docstring); path results under * / ? are solution SETS per
+    the spec's ALP semantics, so the union is deduped."""
+    if not mod:
+        return df
+    from rdf_mapreduce_joins_spark.operators.graph import transitive_closure
+
+    if mod in ("+", "*"):
+        closed = transitive_closure(df, src="subject", dst="object").select(
+            F.col("src").alias("subject"), F.col("dst").alias("object")
+        )
+        if mod == "+":
+            return closed
+    nodes = df.select("subject").unionByName(
+        df.select(F.col("object").alias("subject"))
+    )
+    ident = nodes.select("subject", F.col("subject").alias("object"))
+    return (closed if mod == "*" else df).unionByName(ident).distinct()
+
+
 def _pattern_df(
     spark: SparkSession, sf_dir: str, pat: Pattern, encoded: bool = False
 ) -> DataFrame:
@@ -668,26 +693,7 @@ def _pattern_df(
                 _pred_df_pruned(spark, sf_dir, alt, eff_table, encoded)
             )
         obj_fk = _obj_is_fk(pat.p, pat.s_table)
-    if pat.mod:
-        from rdf_mapreduce_joins_spark.operators.graph import transitive_closure
-
-        if pat.mod in ("+", "*"):
-            closed = transitive_closure(df, src="subject", dst="object").select(
-                F.col("src").alias("subject"), F.col("dst").alias("object")
-            )
-        if pat.mod == "+":
-            df = closed
-        else:
-            # Zero-length match over the predicate's node domain: the
-            # identity pairs (x, x) for every subject or object of an
-            # edge. Path results under * / ? are solution SETS per the
-            # spec's ALP semantics, so dedupe the union.
-            nodes = df.select("subject").unionByName(
-                df.select(F.col("object").alias("subject"))
-            )
-            ident = nodes.select("subject", F.col("subject").alias("object"))
-            base = closed if pat.mod == "*" else df
-            df = base.unionByName(ident).distinct()
+    df = _path_modifier(df, pat.mod)
     if not _is_var(pat.s):
         s_const = F.lit(_const_to_id(pat.s)) if encoded else F.lit(pat.s)
         df = df.filter(F.col("subject") == s_const)
@@ -867,31 +873,78 @@ def _infer_s_tables(groups: list[list[Pattern]]) -> list[list[Pattern]]:
     return [refine(g) for g in groups]
 
 
-def _join_chain(
+@dataclass(frozen=True)
+class _StarCodec:
+    """How a star-source solution frame holds its terms: per-variable
+    kinds from :func:`_var_kinds`, and whether id variables carry
+    tag-packed int64 ids (``encoded``) or IRI text."""
+
+    kinds: dict[str, tuple[str, frozenset[str]]]
+    encoded: bool
+
+    def is_id(self, name: str) -> bool:
+        return self.kinds.get(name, ("str",))[0] == "id"
+
+    def literal(self, name: str, term: str) -> str:
+        """A constant compared against ``name``, as SQL: the encoded id
+        of an IRI constant (the IN list constant-folds toward the
+        scan), quoted text otherwise."""
+        if self.encoded and self.is_id(name):
+            return str(_const_to_id(term))
+        return "'" + term.replace("'", "''") + "'"
+
+    def text(self, name: str) -> F.Column | str:
+        """``name`` as term text for an aggregate input: an encoded id
+        decodes per row (a concat, not a join)."""
+        if self.encoded and self.is_id(name):
+            return _decode_id(F.col(name), self.kinds[name][1])
+        return name
+
+    def decode(self, df: DataFrame, names: list[str]) -> DataFrame:
+        """Decode the id columns among ``names`` back to IRI text."""
+        if not self.encoded:
+            return df
+        return df.select(
+            *[
+                _decode_id(F.col(n), self.kinds[n][1]).alias(n)
+                if n in names and self.is_id(n)
+                else F.col(n)
+                for n in df.columns
+            ]
+        )
+
+
+def _lower_star(
     spark: SparkSession,
     sf_dir: str,
-    patterns: list[Pattern],
-    broadcast_idx: set[int],
-    encoded: bool = False,
-) -> DataFrame:
-    """Inner-join patterns left-to-right on shared variables.
+    groups: list[list[Pattern]],
+    encoded: bool,
+    filter_vars: set[str] = frozenset(),
+    broadcast_idx: set[int] = frozenset(),
+) -> tuple[list[list[DataFrame]], _StarCodec]:
+    """The star source's pattern lowering: one frame per pattern for
+    the required group (``groups[0]``) and each sub-group, after
+    subject-table inference across all of them.
 
-    Catalyst/AQE then reorders and picks physical strategies (JS1-JS3);
-    the left-to-right chain only fixes the *logical* shape."""
-    out: DataFrame | None = None
-    for i, pat in enumerate(patterns):
-        df = _pattern_df(spark, sf_dir, pat, encoded=encoded)
-        if i in broadcast_idx:
-            df = F.broadcast(df)
-        if out is None:
-            out = df
-        else:
-            shared = [c for c in df.columns if c in out.columns]
-            if not shared:
-                raise ValueError(f"pattern {pat} shares no variable with prior patterns")
-            out = out.join(df, on=shared, how="inner")
-    assert out is not None
-    return out
+    Encoding: joins run on int64 ids unless a variable predicate
+    appears (its object domain mixes FK IRIs and literals — see the
+    Pattern docstring) or a FILTER/BIND in ``filter_vars`` reads an
+    id-typed variable (it must see IRI text)."""
+    refined = _infer_s_tables(groups)
+    kinds = _var_kinds(refined)
+    encoded = (
+        encoded
+        and not any(p.p_is_var for grp in refined for p in grp)
+        and not any(kinds.get(v, ("str",))[0] == "id" for v in filter_vars)
+    )
+    frames = [
+        [_pattern_df(spark, sf_dir, p, encoded=encoded) for p in grp]
+        for grp in refined
+    ]
+    frames[0] = [
+        F.broadcast(df) if i in broadcast_idx else df for i, df in enumerate(frames[0])
+    ]
+    return frames, _StarCodec(kinds, encoded)
 
 
 def bgp(
@@ -914,7 +967,9 @@ def bgp(
     * ``optional``  — SPARQL OPTIONAL groups → left outer join (J5),
     * ``negation``  — OPTIONAL+!bound / NOT EXISTS groups → anti join (J6),
     * ``exists``    — ASK/EXISTS groups → semi join (J7),
-    * ``filters``   — SQL boolean expressions over variable columns (P3/J8),
+    * ``binds``     — (alias, SQL expression) computed columns,
+    * ``filters``   — SQL boolean expressions over variable columns and
+      BIND aliases (P3/J8),
     * ``select``    — output variables (``?x`` names → columns),
     * ``encoded``   — dictionary-encode IRIs: all joins/filters/distinct
       run on int64 ids; the final projection decodes back to IRI
@@ -927,75 +982,39 @@ def bgp(
     sub-group's frame BEFORE its join (the SPARQL semantics of a
     FILTER referencing only group-local variables; filters that see
     outer variables are the caller's job to reject).
+
+    The patterns lower through the star source (:func:`_lower_star`)
+    and assemble in the SPARQL executor's one group assembler
+    (plans/sparql.py::_assemble) — the same plan the query text would
+    compile to.
     """
+    from rdf_mapreduce_joins_spark.plans.sparql import _assemble
 
-    def _norm(groups):
-        out_: list[tuple[list[Pattern], list[str]]] = []
-        for g in groups or []:
-            if isinstance(g, tuple):
-                out_.append((list(g[0]), list(g[1])))
-            else:
-                out_.append((list(g), []))
-        return out_
-
-    opt_g, neg_g, exi_g = _norm(optional), _norm(negation), _norm(exists)
-    if encoded and any(
-        p.p_is_var
-        for grp in [patterns, *(p for p, _ in opt_g + neg_g + exi_g)]
-        for p in grp
-    ):
-        # Variable predicates bind mixed FK-IRI/literal objects — no
-        # shared int64 representation exists, so the whole group runs
-        # on the string path (see Pattern docstring).
-        encoded = False
-    n_opt, n_neg = len(opt_g), len(neg_g)
-    refined = _infer_s_tables(
-        [patterns, *(p for p, _ in opt_g), *(p for p, _ in neg_g), *(p for p, _ in exi_g)]
+    subs = [
+        ((list(g[0]), list(g[1])) if isinstance(g, tuple) else (list(g), []), how)
+        for groups, how in (
+            (optional, "left"),
+            (negation, "left_anti"),
+            (exists, "left_semi"),
+        )
+        for g in groups or []
+    ]
+    frames, codec = _lower_star(
+        spark,
+        sf_dir,
+        [list(patterns), *(pats for (pats, _f), _how in subs)],
+        encoded,
+        broadcast_idx=broadcast_idx or set(),
     )
-    patterns = refined[0]
-    opt_g = [(refined[1 + i], f) for i, (_, f) in enumerate(opt_g)]
-    neg_g = [(refined[1 + n_opt + i], f) for i, (_, f) in enumerate(neg_g)]
-    exi_g = [(refined[1 + n_opt + n_neg + i], f) for i, (_, f) in enumerate(exi_g)]
-    out = _join_chain(spark, sf_dir, patterns, broadcast_idx or set(), encoded=encoded)
-    all_groups = [patterns, *(p for p, _ in opt_g + neg_g + exi_g)]
-    for (group, gfilters), how in (
-        *[(g, "left") for g in opt_g],
-        *[(g, "left_anti") for g in neg_g],
-        *[(g, "left_semi") for g in exi_g],
-    ):
-        gdf = _join_chain(spark, sf_dir, group, set(), encoded=encoded)
-        for f in gfilters:
-            gdf = gdf.filter(F.expr(f))
-        shared = [c for c in gdf.columns if c in out.columns]
-        if not shared:
-            raise ValueError("group shares no variable with required patterns")
-        out = out.join(gdf, on=shared, how=how)
-    for f in filters or []:
-        out = out.filter(F.expr(f))
-    for alias, sql in binds or []:
-        # BIND introduces a NEW variable (SPARQL forbids rebinding)
-        if alias in out.columns:
-            raise ValueError(f"BIND alias ?{alias} already bound")
-        out = out.withColumn(alias, F.expr(sql))
-    if select:
-        names = [v[1:] if v.startswith("?") else v for v in select]
-        out = out.select(*names)
-        if distinct:
-            # distinct over ids (8-byte comparisons), decode after
-            out = out.distinct()
-        if encoded:
-            kinds = _var_kinds(all_groups)
-            out = out.select(
-                *[
-                    _decode_id(F.col(n), kinds[n][1]).alias(n)
-                    if kinds.get(n, ("str",))[0] == "id"
-                    else F.col(n)
-                    for n in names
-                ]
-            )
-    elif distinct:
-        out = out.distinct()
-    return out
+    return _assemble(
+        frames[0],
+        [(fr, f, how) for fr, ((_p, f), how) in zip(frames[1:], subs)],
+        codec,
+        binds=binds or [],
+        filters=filters or [],
+        select=select,
+        distinct=distinct,
+    )
 
 
 # --------------------------------------------------------------------------

@@ -10,7 +10,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from rdf_mapreduce_joins_spark.plans import sparql as S
-from rdf_mapreduce_joins_spark.plans.generic_rdf import RDF_TYPE, sparql_triples
+from rdf_mapreduce_joins_spark.plans.generic_rdf import (
+    RDF_TYPE,
+    build_triples_store,
+    sparql_triples,
+    sparql_triples_indexed,
+)
 from rdf_mapreduce_joins_spark.plans.rdf import triples
 from rdf_mapreduce_joins_spark.sources.ntriples import read_ntriples, write_ntriples
 
@@ -26,6 +31,22 @@ def nt_triples(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("nt") / "triples.nt")
     write_ntriples(triples(spark, "/root/testdata/sf0.001"), path)
     return read_ntriples(spark, path)
+
+
+@pytest.fixture(scope="module")
+def nt_store(spark, nt_triples, tmp_path_factory):
+    """The round-tripped triples persisted once as the encoded store
+    (xxhash64 ids + on-disk dictionary) — the input that puts the
+    raw-frame source on its id path."""
+    path = str(tmp_path_factory.mktemp("nt_store") / "store")
+    build_triples_store(nt_triples, path)
+    return path
+
+
+def decodes_ids(df):
+    """The id path's tell: a dictionary decode join in the plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return "struct<id:bigint,term:string>" in plan
 
 
 EQUIV_TEXTS = [
@@ -160,20 +181,26 @@ ENC_ELIGIBLE = [
 
 
 @pytest.mark.parametrize("text", ENC_ELIGIBLE, ids=range(len(ENC_ELIGIBLE)))
-def test_encoded_generic_equals_string_path(spark, nt_triples, text):
-    """encoded=True (xxhash64 surrogate-id joins + dictionary decode)
-    must produce exactly the string path's rows."""
-    got = rows(sparql_triples(nt_triples, text, encoded=True))
+def test_encoded_generic_equals_string_path(spark, nt_triples, nt_store, text):
+    """Over the store (xxhash64 surrogate-id joins + dictionary decode)
+    the query runs on ids and must produce exactly the string path's
+    rows."""
+    df = sparql_triples_indexed(spark, nt_store, text)
+    assert decodes_ids(df)
+    got = rows(df)
     want = rows(sparql_triples(nt_triples, text))
     assert got == want and got
 
 
-def test_encoded_falls_back_on_filters(spark, nt_triples):
-    """A FILTER forces the string path; encoded=True must still be
-    correct (automatic fallback), not wrong or erroring."""
+def test_encoded_falls_back_on_filters(spark, nt_triples, nt_store):
+    """A FILTER forces the string path even over the store: it must
+    read the store's string columns and still be correct, not wrong or
+    erroring."""
     text = """SELECT ?c ?seg WHERE {
                 ?c <mktsegment> ?seg . FILTER(?seg = "BUILDING") }"""
-    got = rows(sparql_triples(nt_triples, text, encoded=True))
+    df = sparql_triples_indexed(spark, nt_store, text)
+    assert not decodes_ids(df)
+    got = rows(df)
     want = rows(sparql_triples(nt_triples, text))
     assert got == want and got
 
@@ -201,6 +228,17 @@ def test_generic_bind(spark, nt_triples):
         )
     )
     assert got and all(lbl.startswith("region:") for _, lbl in got)
+    # the group's FILTER sees the BIND alias: one row per ASIA nation
+    asia = rows(
+        sparql_triples(
+            nt_triples,
+            """SELECT ?r ?label WHERE {
+                 ?r <name> ?nm . ?n <region> ?r .
+                 BIND(concat("region:", ?nm) AS ?label)
+                 FILTER(?label = "region:ASIA") }""",
+        )
+    )
+    assert asia == [("region/2", "region:ASIA")] * 5
 
 
 def test_generic_subquery(spark, nt_triples):
@@ -228,19 +266,20 @@ def test_generic_describe(spark, nt_triples):
     assert any(o == "region/2" for _s, _p, o in got)
 
 
-@pytest.mark.parametrize("encoded", [False, True])
-def test_variable_predicate_generic(spark, nt_triples, encoded):
+@pytest.mark.parametrize("stored", [False, True])
+def test_variable_predicate_generic(spark, nt_triples, nt_store, stored):
     """Variable predicates over the generic frame: the predicate NAME
     binds as a string column on BOTH paths (it is never hash-encoded),
-    and endpoint ids still decode through the dictionary."""
-    got = sorted(
-        tuple(r)
-        for r in sparql_triples(
-            nt_triples,
-            "SELECT DISTINCT ?p ?s WHERE { ?s ?p <nation/3> . }",
-            encoded=encoded,
-        ).collect()
+    and over the store the endpoint ids still decode through the
+    dictionary."""
+    text = "SELECT DISTINCT ?p ?s WHERE { ?s ?p <nation/3> . }"
+    df = (
+        sparql_triples_indexed(spark, nt_store, text)
+        if stored
+        else sparql_triples(nt_triples, text)
     )
+    assert decodes_ids(df) == stored
+    got = sorted(tuple(r) for r in df.collect())
     want = sorted(
         tuple(r)
         for r in nt_triples.filter(F.col("object") == "nation/3")
@@ -305,12 +344,20 @@ class TestNamedGraphs:
             F.col("predicate") == "mktsegment"
         ).count()
 
-    def test_encoded_path_equivalence(self, quads):
-        from rdf_mapreduce_joins_spark.plans.generic_rdf import sparql_quads
+    def test_encoded_path_equivalence(self, spark, quads, tmp_path_factory):
+        from rdf_mapreduce_joins_spark.plans.generic_rdf import (
+            build_quads_store,
+            sparql_quads,
+            sparql_quads_indexed,
+        )
 
+        path = str(tmp_path_factory.mktemp("quad_store") / "qs")
+        build_quads_store(quads, path)
         q = "SELECT ?g ?s WHERE { GRAPH ?g { ?s <name> ?o . } }"
         a = sorted(tuple(r) for r in sparql_quads(quads, q).collect())
-        b = sorted(tuple(r) for r in sparql_quads(quads, q, encoded=True).collect())
+        enc = sparql_quads_indexed(spark, path, q)
+        assert decodes_ids(enc)
+        b = sorted(tuple(r) for r in enc.collect())
         assert a == b and a
 
     def test_star_compiler_rejects_graph(self, spark):
@@ -339,19 +386,23 @@ class TestNamedGraphs:
             sparql_quads(tri, "SELECT ?s WHERE { ?s <name> ?o . }")
 
 
-def test_predicate_var_as_endpoint_encoded_falls_back(spark, nt_triples):
+def test_predicate_var_as_endpoint_encoded_falls_back(spark, nt_triples, tmp_path):
     """Regression: a predicate variable reused in subject position
-    (RDF-Schema predicates-as-subjects) must give identical results on
-    encoded=True — the encoded path falls back to strings instead of
+    (RDF-Schema predicates-as-subjects) must give identical results
+    over the store — the query falls back to strings instead of
     joining a name column against an xxhash64 column."""
     extra = spark.createDataFrame(
         [("nation", "domain", "customer"), ("region", "domain", "nation")],
         "subject string, predicate string, object string",
     )
     t = nt_triples.unionByName(extra)
+    store = str(tmp_path / "store")
+    build_triples_store(t, store)
     q = "SELECT DISTINCT ?p ?d WHERE { ?s ?p ?o . ?p <domain> ?d . }"
     a = sorted(tuple(r) for r in sparql_triples(t, q).collect())
-    b = sorted(tuple(r) for r in sparql_triples(t, q, encoded=True).collect())
+    enc = sparql_triples_indexed(spark, store, q)
+    assert not decodes_ids(enc)
+    b = sorted(tuple(r) for r in enc.collect())
     assert a == b and a
 
 

@@ -553,6 +553,19 @@ def test_transitive_closure_long_chain_round_count(spark):
     assert transitive_closure(edges).count() == 101 * 100 // 2
 
 
+def test_transitive_closure_raises_without_fixpoint(spark):
+    """A 5-node chain needs two growing rounds plus one that adds
+    nothing: max_iter=1 must raise instead of returning the partial
+    closure; max_iter=3 reaches the fixpoint with all 10 pairs."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 5)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="fixpoint"):
+        transitive_closure(edges, max_iter=1)
+    got = {tuple(r) for r in transitive_closure(edges, max_iter=3).collect()}
+    assert got == {(a, b) for a in range(1, 6) for b in range(a + 1, 6)}
+
+
 class TestInvertedIndex:
     def test_indexed_matches_inline(self, spark, tmp_path):
         from rdf_mapreduce_joins_spark.operators import inverted_index as ii

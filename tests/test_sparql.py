@@ -694,7 +694,9 @@ def test_values_multi_arity_mismatch_rejected():
 
 
 def test_bind_computed_column(spark, sf_dir):
-    """BIND introduces a computed variable usable in SELECT/ORDER."""
+    """BIND introduces a computed variable usable in SELECT/ORDER — and
+    in the group's FILTER, which applies after BIND (SPARQL 1.1
+    §18.2.2)."""
     got = rows(
         S.sparql(
             spark,
@@ -714,6 +716,17 @@ def test_bind_computed_column(spark, sf_dir):
     )
     assert sorted(lbl for _, lbl in got) == sorted(nm + "!" for _, nm in want)
     assert got
+    asia = rows(
+        S.sparql(
+            spark,
+            sf_dir,
+            """SELECT ?r ?label WHERE {
+                 ?r <name> ?nm . ?n <region> ?r .
+                 BIND(concat("region:", ?nm) AS ?label)
+                 FILTER(?label = "region:ASIA") }""",
+        )
+    )
+    assert asia == [("region/2", "region:ASIA")] * 5  # one per ASIA nation
 
 
 def test_bind_over_id_var_uses_decoded_strings(spark, sf_dir):
@@ -779,7 +792,8 @@ def test_group_concat_separator_only_for_group_concat():
 
 def test_subquery_aggregate_join(spark, sf_dir):
     """{ SELECT ... GROUP BY } subquery joins the outer group on the
-    shared variable; the outer FILTER sees the aggregate column."""
+    shared variable; the outer FILTER sees the aggregate column and,
+    with a BIND beside the subquery, the BIND alias."""
     got = {
         r.nname: r.cnt
         for r in S.sparql(
@@ -802,6 +816,19 @@ def test_subquery_aggregate_join(spark, sf_dir):
         want[r.nname] = want.get(r.nname, 0) + 1
     want = {k: v for k, v in want.items() if v > 6}
     assert got == want and got
+    asia = rows(
+        S.sparql(
+            spark,
+            sf_dir,
+            """SELECT ?r ?label ?cnt WHERE {
+                 ?r <name> ?nm .
+                 { SELECT ?r (COUNT(?n) AS ?cnt)
+                   WHERE { ?n <region> ?r . } GROUP BY ?r }
+                 BIND(concat("region:", ?nm) AS ?label)
+                 FILTER(?label = "region:ASIA") }""",
+        )
+    )
+    assert asia == [("region/2", "region:ASIA", 5)]
 
 
 def test_subquery_limit_restricts_outer(spark, sf_dir):
@@ -1128,6 +1155,21 @@ def test_minmax_iri_decodes_before_aggregating(spark, sf_dir):
     for ck, nk in zip(cust["c_custkey"], cust["c_nationkey"]):
         want.setdefault(nname[nk], []).append(f"customer/{ck}")
     assert got == {k: (min(v), max(v)) for k, v in want.items()} and got
+    # a FILTER on ?c puts the group on the string path: ?c is already
+    # IRI text there and must aggregate as it is
+    on_text = {
+        r["nname"]: (r["first_cust"], r["last_cust"])
+        for r in S.sparql(
+            spark,
+            sf_dir,
+            """SELECT ?nname (MIN(?c) AS ?first_cust)
+                      (MAX(?c) AS ?last_cust)
+               WHERE { ?c a <customer> ; <nation> ?n . ?n <name> ?nname .
+                       FILTER(?c != "customer/-1") }
+               GROUP BY ?nname""",
+        ).collect()
+    }
+    assert on_text == got
 
 
 def test_sample_and_group_concat_over_iri(spark, sf_dir):
